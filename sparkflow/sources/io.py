@@ -1427,13 +1427,16 @@ def _tv_latest_version(base: str) -> int:
 def _pq_footer_stats(path: str, keys: list) -> "tuple | None":
     """(n_rows, [(min, max) per key]) read from the parquet FOOTER —
     no Spark job. Returns None when any required row-group statistic
-    is absent (exotic writer, stats disabled); callers then fall back
-    to a per-file Spark aggregate. Zero-row files return (0, []) so
-    callers can keep their loud rejection.
+    is absent (exotic writer, stats disabled) or not known exact;
+    callers then fall back to a per-file Spark aggregate. Zero-row
+    files return (0, []) so callers can keep their loud rejection.
 
-    Exactness: every versioned table here keys on INTEGER columns
-    (o_orderkey, o_custkey, user_id), and parquet int64 row-group
-    stats are exact — the truncation caveat applies to strings only.
+    Exactness: footer stats are used only for INTEGER key columns
+    (INT32/INT64 physical type — o_orderkey, o_custkey, user_id), whose
+    row-group stats are exact; any other physical type (truncatable
+    byte arrays, floats), or a statistic the reader reports as
+    inexact (`is_min_value_exact`/`is_max_value_exact` false), returns
+    None.
     Guide §5 (the driver should do almost no data work): per-file
     manifest stats are metadata, and dispatching one Spark job per
     file made the staging of every versioned-table key driver-bound
@@ -1453,10 +1456,14 @@ def _pq_footer_stats(path: str, keys: list) -> "tuple | None":
         j = colidx.get(key)
         if j is None:
             return None
+        if rg0.column(j).physical_type not in ("INT32", "INT64"):
+            return None
         mn = mx = None
         for i in range(md.num_row_groups):
             st = md.row_group(i).column(j).statistics
-            if st is None or not st.has_min_max:
+            if (st is None or not st.has_min_max
+                    or getattr(st, "is_min_value_exact", True) is False
+                    or getattr(st, "is_max_value_exact", True) is False):
                 return None
             mn = st.min if mn is None else min(mn, st.min)
             mx = st.max if mx is None else max(mx, st.max)

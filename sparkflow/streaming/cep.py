@@ -921,8 +921,8 @@ class CepPattern:
         (latest prefix-complete position, latest negated position) —
         causal, so the keyed state machine carries them exactly. Only
         TERMINAL negation refuses here: its window looks at FUTURE
-        events, so its streaming form is the watermarked outer interval
-        join (stateful.cep_negation_stream)."""
+        events, so it streams through the keyed shell's terminal-
+        negation hold (compile_stream, stateful._cep_keyed_fn)."""
         if self.neg is not None or self.pending_neg is not None:
             raise ValueError(
                 "stream_chains() covers the causal chain set — a "
@@ -959,7 +959,7 @@ class CepPattern:
                     "chains (r14) — stream_chains() has no single "
                     "gating chain to return (compile_stream routes "
                     "these patterns to the or-split keyed machine, "
-                    "stateful.cep_or_split_stream)"
+                    "stateful._cep_or_split_fn)"
                 )
         counted = [s for s in self.steps
                    if s.one_or_more or s.up_to is not None]
@@ -1089,6 +1089,41 @@ class CepPattern:
             .select(key, "match_id", "match_ts", "start_id", "start_ts")
         )
 
+    def _optional_variants(self) -> tuple:
+        """The 2^k include/exclude step lists of the k optional steps
+        (the batch compile's variant enumeration) and, per variant, the
+        set of with_<name> flags it includes."""
+        opts = [(i, s) for i, s in enumerate(self.steps) if s.optional]
+        lists, incl = [], []
+        for mask in range(1 << len(opts)):
+            inc = {i for j, (i, _s) in enumerate(opts) if mask >> j & 1}
+            lists.append([s for i, s in enumerate(self.steps)
+                          if not s.optional or i in inc])
+            incl.append(frozenset(
+                f"with_{s.name}" for i, s in opts if i in inc))
+        return lists, incl
+
+    @staticmethod
+    def _split_variants(req, split) -> list:
+        """The 2^|split| quantifier variants of the both-strict
+        oneOrMore/times(1, m) steps: each split step either one
+        repetition or at least two (the batch OR-of-chains compile)."""
+        out = []
+        for mask in range(1 << len(split)):
+            var = []
+            for s in req:
+                if s in split:
+                    var.append(
+                        replace(s, times=2)
+                        if mask >> split.index(s) & 1
+                        else replace(s, one_or_more=False, times=1,
+                                     up_to=None)
+                    )
+                else:
+                    var.append(s)
+            out.append(var)
+        return out
+
     def compile_stream(self, spark, files_dir: str, sf_dir: str):
         """TRUE-STREAMING compile (readStream + applyInPandasWithState):
         the carry chains are literally a per-key state machine — per
@@ -1096,32 +1131,40 @@ class CepPattern:
         previous-row hits (for strict transitions), O(1) per key
         regardless of stream length — so the same declarative pattern
         runs unbounded with bounded state, Flink's CEP-on-keyed-state
-        shape. Optional steps stream too: their annotation chains ride
-        in the same state tuple and emit the same `with_<name>` flags
-        as the batch compile. Mid-pattern negated gaps stream (causal
-        prefix-maxima gates), every after-match skip strategy streams
-        (causal cursors, r13), and ANY number of counted steps
-        (oneOrMore / times(n, m)) stream with their `n_<name>` outputs
-        — the carry pairs with one count-at-start per counted step and
-        the running counts ride the state (r13, r12 verdict item 8).
-        TERMINAL negation streams too (r13): candidates hold in keyed
-        state until the watermark passes match_ts + T — see
-        stateful.cep_terminal_negation_stream. Output timestamps in
-        epoch µs (the stateful-twin convention). Bit-equality with the
-        batch compile is pinned by pytest across micro-batch
-        boundaries for every streaming surface (the terminal-negation
-        twin's contract is the match set — its batch-only
-        next_<neg>_ts audit column is unbounded-lookahead).
+        shape. Output timestamps in epoch µs (the stateful-twin
+        convention).
 
-        r15 invariant: EVERY pattern the batch compile() accepts now
-        streams — the last composition refusals (midneg×gap with
-        skip / terminal negation / optionals; OR-split × negation;
-        strict-optional enum × negation) were constructed this round,
-        so the only streaming-specific requirements left are
-        declarative etype= steps (row-evaluable predicates for keyed
-        state) and event times >= 1970-01-01 (the -1 state sentinel);
-        every remaining raise in this method mirrors a batch
-        refusal."""
+        The twin is composed from three independent parts run by one
+        keyed-state shell (stateful._cep_keyed_fn):
+
+        - ONE match machine, picked by the pattern class: the carry
+          chains (with optional-step annotation chains, the 2^k
+          strict-optional enumeration and counted-step pools), the
+          both-strict OR-split, the gap-bounded buffers (plain or
+          2^k-enumerated), the until() freeze riders (plain or over
+          variants), the notNext delayed absorption, or — under an
+          after-match skip — the position-struct carries (plain or
+          gap-bounded). Mid-pattern negated gaps ride every machine
+          as causal prefix-maxima gates.
+        - The terminal-negation hold, attached exactly when the
+          pattern ends in notFollowedBy(within=T): candidates wait in
+          keyed state until the watermark passes match_ts + T.
+        - The after-match-skip cursor, present exactly when the
+          pattern has a skip strategy (the position-struct machines
+          declare it): it folds over what the hold (or the machine)
+          emits, in match order.
+
+        Bit-equality with the batch compile is pinned by pytest across
+        micro-batch boundaries for every streaming surface (a held
+        twin's contract is the match set — its batch-only
+        next_<neg>_ts audit column is unbounded-lookahead). EVERY
+        pattern the batch compile() accepts streams; the only
+        streaming-specific requirements are declarative etype= steps
+        (row-evaluable predicates for keyed state), event times >=
+        1970-01-01 (the -1 state sentinel) and, for the carry-chain,
+        skip, notNext and until machines, a gating chain of >= 2
+        expanded steps. Every other raise in this method mirrors a
+        batch refusal."""
         from . import stateful
 
         if any(s.contiguity == "followed_by_any" for s in self.steps):
@@ -1142,792 +1185,205 @@ class CepPattern:
                 spark, files_dir, sf_dir, a.etype, b.etype,
                 self.within_us,
             )
-        if any(s.not_next is not None for s in self.steps):
-            # r15: notNext streams via one-row delayed absorption
-            # (stateful._cep_not_next_fn); refusals mirror compile().
-            # r16 (r15 verdict item 1): skip strategies and gap bounds
-            # COMPOSE — the delayed absorption rides the r13 skip
-            # cursors and the r14 count-gated gap buffers (the LEAD(1)
-            # gate is causal at the bind row), so the nn routes below
-            # mirror the plain gap/skip dispatch with nn_ets threaded.
-            if self.steps[-1].not_next is not None:
+        has_nn = any(s.not_next is not None for s in self.steps)
+        has_until = any(s.until is not None for s in self.steps)
+        has_opt = any(s.optional for s in self.steps)
+        req = [s for s in self.steps if not s.optional]
+        counted_steps = [s for s in self.steps
+                         if s.one_or_more or s.up_to is not None]
+        split = [
+            s for i, s in enumerate(req)
+            if s.contiguity == "next" and s.times == 1
+            and (s.one_or_more or (s.up_to is not None and s.up_to >= 2))
+            and i + 1 < len(req)
+            and req[i + 1].contiguity == "next"
+        ]
+        if has_nn and self.steps[-1].not_next is not None:
+            raise ValueError(
+                "a pattern cannot end in notNext (FlinkCEP refuses the "
+                "same) — there is no following step to emit the match "
+                "at; use a terminal notFollowedBy with a within "
+                "horizon instead"
+            )
+        if has_nn and has_opt:
+            raise ValueError(
+                "notNext composes with plain, counted, mid-negated and "
+                "terminal-negated chains, skip strategies, gap bounds "
+                "and until() (r16) — its combination with optional "
+                "steps is not built (each 2^k variant chain would need "
+                "its own pending slot; the batch compile and "
+                "compile_stream refuse the same combination to keep "
+                "parity)"
+            )
+        if has_nn and split:
+            raise ValueError(
+                "notNext does not compose with a both-strict "
+                "oneOrMore/times(1, m) step in the same pattern — the "
+                "OR-split streaming machine has no delayed absorption; "
+                "relax one edge of the split step"
+            )
+        if self.pending_neg is not None:
+            raise ValueError(
+                f"mid-pattern notFollowedBy {self.pending_neg[0]!r} must "
+                "be followed by a positive followed_by() step (to end a "
+                "pattern with a negation, pass within=)"
+            )
+        if self.steps and self.steps[-1].optional:
+            raise ValueError(
+                "the final step cannot be optional — it anchors the "
+                "match row"
+            )
+        for c in counted_steps:
+            if c.etype is None:
                 raise ValueError(
-                    "a pattern cannot end in notNext (FlinkCEP "
-                    "refuses the same) — there is no following step "
-                    "to emit the match at; use a terminal "
-                    "notFollowedBy with a within horizon instead"
+                    f"counted step {c.name!r} was built from a Column "
+                    "predicate — declare it with etype=... to compile "
+                    "for streaming"
                 )
-            if any(s.optional for s in self.steps):
+        if self.neg is not None and self.neg_etype is None:
+            raise ValueError(
+                "the terminal negation was built from a Column "
+                "predicate — declare it with etype=... to compile for "
+                "streaming"
+            )
+        if self.gap_us is not None and counted_steps:
+            raise ValueError(
+                "oneOrMore/times(n, m) do not compose with "
+                "within(..., 'previous_and_current') — the batch "
+                "compile refuses the same combination"
+            )
+        if self.skip != "no_skip" and (has_opt or counted_steps):
+            raise ValueError(
+                f"after_match_skip({self.skip!r}) does not compose with "
+                "optional()/oneOrMore()/times(n, m) annotations (the "
+                "batch compile refuses the same combination)"
+            )
+        if counted_steps and has_opt and self._needs_variant_enum():
+            raise ValueError(
+                "repetition counts do not compose with optional steps "
+                "in a strict-contiguity region (the batch compile "
+                "refuses the same combination)"
+            )
+        if split and has_opt:
+            raise ValueError(
+                "optional() does not compose with a both-strict "
+                "oneOrMore/times(1, m) step (the batch compile refuses "
+                "the same combination)"
+            )
+        if len(split) > 3:
+            raise ValueError(
+                f"{len(split)} both-strict oneOrMore/times(1, m) steps "
+                f"would enumerate {2 ** len(split)} OR-variant chains "
+                "— cap is 3"
+            )
+        n_opt = sum(s.optional for s in self.steps)
+        if n_opt > 6:
+            raise ValueError(
+                f"{n_opt} optional steps would enumerate "
+                f"{2 ** n_opt} variant chains — cap is 6 (64 chains)"
+            )
+
+        def need_two(*chains):
+            # the carry-chain, skip, notNext and until machines gate on
+            # a chain of >= 2 expanded steps; the gap buffers, the 2^k
+            # enumeration and the OR-split run shorter variants too
+            if any(len(c) < 2 for c in chains):
                 raise ValueError(
-                    "notNext composes with plain, counted, "
-                    "mid-negated and terminal-negated chains, skip "
-                    "strategies, gap bounds and until() (r16) — its "
-                    "combination with optional steps is not built "
-                    "(each 2^k variant chain would need its own "
-                    "pending slot; the batch compile and "
-                    "compile_stream refuse the same combination to "
-                    "keep parity)"
-                )
-            req = [s for s in self.steps if not s.optional]
-            for i, st_ in enumerate(req):
-                if (st_.contiguity == "next" and st_.times == 1
-                        and (st_.one_or_more
-                             or (st_.up_to is not None
-                                 and st_.up_to >= 2))
-                        and i + 1 < len(req)
-                        and req[i + 1].contiguity == "next"):
-                    raise ValueError(
-                        "notNext does not compose with a both-strict "
-                        "oneOrMore/times(1, m) step in the same "
-                        "pattern — the OR-split streaming machine "
-                        "has no delayed absorption; relax one edge "
-                        "of the split step"
-                    )
-            counted_steps = [s for s in self.steps
-                             if s.one_or_more or s.up_to is not None]
-            for c in counted_steps:
-                if c.etype is None:
-                    raise ValueError(
-                        f"counted step {c.name!r} was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-            if self.neg is not None and self.neg_etype is None:
-                raise ValueError(
-                    "the terminal negation was built from a Column "
-                    "predicate — declare it with etype=... to "
-                    "compile for streaming"
-                )
-            steps_x, nn_ets = self._not_next_expansion()
-            if any(s.until is not None for s in self.steps):
-                # r16: notNext × until streams — the until machine's
-                # freeze riders with one-row delayed absorption
-                # (stateful._cep_until_fn nn handling; resolution
-                # runs before the stop freeze). gap/skip cannot
-                # co-occur (both refuse counted steps) and the
-                # or-split combination was refused above.
-                return stateful.cep_until_stream(
-                    spark, files_dir, sf_dir, self._until_expansion(),
-                    self.within_us,
-                    [(c.name, c.etype, c.up_to,
+                    "streaming compile needs >= 2 positive steps")
+
+        nn_ets = self._not_next_expansion()[1] if has_nn else None
+        cnt = [(c.name, c.etype, c.up_to) for c in counted_steps]
+        flag_names = [f"with_{s.name}" for s in self.steps if s.optional]
+        steps = self._event_expansion(self.steps)
+        if has_until:
+            # until() loops: the paired carries plus per-level freeze
+            # riders (_cep_until_fn); over the OR-split or the 2^k
+            # optional variants, one rider chain per variant
+            # (_cep_until_split_fn). skip and gap bounds cannot
+            # co-occur (both refuse counted steps).
+            cnt_u = [(c.name, c.etype, c.up_to,
                       c.until[2] if c.until is not None else None)
-                     for c in counted_steps],
-                    self.neg_etype if self.neg is not None else None,
-                    self.neg_within_us if self.neg is not None
-                    else None,
+                     for c in counted_steps]
+            if split or has_opt:
+                lists, incl = (
+                    (self._split_variants(req, split), None) if split
+                    else self._optional_variants()
+                )
+                chains = [self._until_expansion(v) for v in lists]
+                need_two(*chains)
+                machine = stateful._cep_until_split_fn(
+                    chains, self.within_us, cnt_u,
+                    incl_flags=incl, flag_names=flag_names,
+                    entry_idx=[self._until_entry_indices(v, counted_steps)
+                               for v in lists],
+                )
+            else:
+                need_two(self._until_expansion())
+                machine = stateful._cep_until_fn(
+                    self._until_expansion(), self.within_us, cnt_u,
                     entry_idx=self._until_entry_indices(
                         self.steps, counted_steps),
                     nn_ets=nn_ets,
                 )
-            if self.gap_us is not None:
-                # batch gap refusals re-checked (this branch returns
-                # before the plain gap dispatch runs its mirrors)
-                if counted_steps:
-                    raise ValueError(
-                        "oneOrMore/times(n, m) do not compose with "
-                        "within(..., 'previous_and_current') — the "
-                        "batch compile refuses the same combination"
-                    )
-                if self.skip != "no_skip":
-                    anchor_idx = self._skip_anchor_idx()
-                    if self.neg is not None:
-                        return stateful.cep_gap_skip_neg_stream(
-                            spark, files_dir, sf_dir, steps_x,
-                            self.within_us, self.gap_us, self.skip,
-                            anchor_idx, self.neg_etype,
-                            self.neg_within_us, nn_ets=nn_ets,
-                        )
-                    return stateful.cep_gap_skip_stream(
-                        spark, files_dir, sf_dir, steps_x,
-                        self.within_us, self.gap_us, self.skip,
-                        anchor_idx, nn_ets=nn_ets,
-                    )
-                if self.neg is not None:
-                    return stateful.cep_gap_negation_stream(
-                        spark, files_dir, sf_dir, steps_x,
-                        self.within_us, self.gap_us, self.neg_etype,
-                        self.neg_within_us, nn_ets=nn_ets,
-                    )
-                return stateful.cep_gap_bound_stream(
-                    spark, files_dir, sf_dir, steps_x, self.within_us,
-                    self.gap_us, nn_ets=nn_ets,
-                )
+        elif self.gap_us is not None:
+            # gap-bounded patterns carry per-level (ts, start) BUFFERS
+            # bounded by one gap horizon — the bound's inherent memory
             if self.skip != "no_skip":
-                if counted_steps:
-                    raise ValueError(
-                        f"after_match_skip({self.skip!r}) does not "
-                        "compose with oneOrMore/times(n, m) "
-                        "annotations (the batch compile refuses the "
-                        "same combination)"
-                    )
-                anchor_idx = self._skip_anchor_idx()
-                if self.neg is not None:
-                    return stateful.cep_skip_neg_stream(
-                        spark, files_dir, sf_dir, steps_x,
-                        self.within_us, self.skip, anchor_idx,
-                        self.neg_etype, self.neg_within_us,
-                        nn_ets=nn_ets,
-                    )
-                return stateful.cep_compiled_stream(
-                    spark, files_dir, sf_dir, steps_x, self.within_us,
-                    skip=self.skip, anchor_idx=anchor_idx,
-                    nn_ets=nn_ets,
+                machine = stateful._cep_gap_skip_fn(
+                    steps, self.within_us, self.gap_us, self.skip,
+                    self._skip_anchor_idx(), nn_ets,
                 )
-            return stateful.cep_not_next_stream(
-                spark, files_dir, sf_dir, steps_x, self.within_us,
-                [(c.name, c.etype, c.up_to) for c in counted_steps],
-                nn_ets, self.neg_etype if self.neg is not None else None,
-                self.neg_within_us if self.neg is not None else None,
-            )
-        if any(s.until is not None for s in self.steps):
-            # r15: until() loops stream via the paired machinery plus
-            # the per-level freeze riders (stateful._cep_until_fn).
-            # Every refusal below mirrors a batch refusal — the
-            # parity invariant holds for this surface too.
-            # r16 (r15 verdict item 8): until × optional streams as
-            # the 2^k full-variant enumeration through the SAME
-            # per-variant freeze-rider machine as the OR-split
-            # (stateful._cep_until_split_fn with incl_flags) — see
-            # the dispatch below the shared refusals.
-            if any(s.optional for s in self.steps):
-                if self._needs_variant_enum():
-                    raise ValueError(
-                        "repetition counts do not compose with "
-                        "optional steps in a strict-contiguity "
-                        "region (the batch compile refuses the same "
-                        "combination)"
-                    )
-                if self.steps[-1].optional:
-                    raise ValueError(
-                        "the final step cannot be optional — it "
-                        "anchors the match row"
-                    )
-            if self.gap_us is not None:
-                raise ValueError(
-                    "oneOrMore/times(n, m) do not compose with "
-                    "within(..., 'previous_and_current') — the batch "
-                    "compile refuses the same combination"
-                )
-            if self.skip != "no_skip":
-                raise ValueError(
-                    f"after_match_skip({self.skip!r}) does not "
-                    "compose with optional()/oneOrMore()/times(n, m) "
-                    "annotations (the batch compile refuses the same "
-                    "combination)"
-                )
-            req = [s for s in self.steps if not s.optional]
-            split = [
-                st_ for i, st_ in enumerate(req)
-                if st_.contiguity == "next" and st_.times == 1
-                and (st_.one_or_more
-                     or (st_.up_to is not None and st_.up_to >= 2))
-                and i + 1 < len(req)
-                and req[i + 1].contiguity == "next"
-            ]
-            counted_steps = [s for s in self.steps
-                             if s.one_or_more or s.up_to is not None]
-            for c in counted_steps:
-                if c.etype is None:
-                    raise ValueError(
-                        f"counted step {c.name!r} was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-            if self.neg is not None and self.neg_etype is None:
-                raise ValueError(
-                    "the terminal negation was built from a Column "
-                    "predicate — declare it with etype=... to "
-                    "compile for streaming"
-                )
-            counted_arg = [
-                (c.name, c.etype, c.up_to,
-                 c.until[2] if c.until is not None else None)
-                for c in counted_steps
-            ]
-            if split:
-                # r16 (r15 verdict item 2): until() × both-strict
-                # OR-split streams — one freeze-rider variant machine
-                # per quantifier expansion, shared counts, winner by
-                # the lexicographic (h, c.., u-as-inf..) max
-                # (stateful._cep_until_split_fn)
-                if any(s.optional for s in self.steps):
-                    raise ValueError(
-                        "optional() does not compose with a "
-                        "both-strict oneOrMore/times(1, m) step (the "
-                        "batch compile refuses the same combination)"
-                    )
-                if len(split) > 3:
-                    raise ValueError(
-                        f"{len(split)} both-strict "
-                        "oneOrMore/times(1, m) steps would enumerate "
-                        f"{2 ** len(split)} OR-variant chains — cap "
-                        "is 3"
-                    )
-                variant_steps, variant_lists = [], []
-                for mask in range(1 << len(split)):
-                    var = []
-                    for s in req:
-                        if s in split:
-                            j = split.index(s)
-                            var.append(
-                                replace(s, times=2)
-                                if mask >> j & 1
-                                else replace(s, one_or_more=False,
-                                             times=1, up_to=None)
-                            )
-                        else:
-                            var.append(s)
-                    variant_steps.append(self._until_expansion(var))
-                    variant_lists.append(var)
-                return stateful.cep_until_split_stream(
-                    spark, files_dir, sf_dir, variant_steps,
-                    self.within_us, counted_arg,
-                    self.neg_etype if self.neg is not None else None,
-                    self.neg_within_us if self.neg is not None
-                    else None,
-                    entry_idx=[
-                        self._until_entry_indices(v, counted_steps)
-                        for v in variant_lists
-                    ],
-                )
-            if any(s.optional for s in self.steps):
-                # r16 (r15 verdict item 8): until × optional — the
-                # 2^k include/exclude variants each run a FULL
-                # freeze-rider chain (the skip-variant shortcut is
-                # unsound under stop gates: excluding an optional
-                # widens the gated gap), combined by the same
-                # per-variant machine as the OR-split, plus
-                # with_<name> flags from the satisfied-variant set
-                opts = [(i, s) for i, s in enumerate(self.steps)
-                        if s.optional]
-                if len(opts) > 6:
-                    raise ValueError(
-                        f"{len(opts)} optional steps would enumerate "
-                        f"{2 ** len(opts)} until-gated variant "
-                        "chains — cap is 6 (64 chains)"
-                    )
-                variant_steps, incl, variant_lists = [], [], []
-                for mask in range(1 << len(opts)):
-                    inc = {i for j, (i, _s) in enumerate(opts)
-                           if mask >> j & 1}
-                    chain = [s for i, s in enumerate(self.steps)
-                             if not s.optional or i in inc]
-                    variant_steps.append(self._until_expansion(chain))
-                    variant_lists.append(chain)
-                    incl.append(frozenset(
-                        f"with_{s.name}" for i, s in opts if i in inc
-                    ))
-                flag_names = [f"with_{s.name}" for _i, s in opts]
-                return stateful.cep_until_split_stream(
-                    spark, files_dir, sf_dir, variant_steps,
-                    self.within_us, counted_arg,
-                    self.neg_etype if self.neg is not None else None,
-                    self.neg_within_us if self.neg is not None
-                    else None,
-                    incl_flags=incl, flag_names=flag_names,
-                    entry_idx=[
-                        self._until_entry_indices(v, counted_steps)
-                        for v in variant_lists
-                    ],
-                )
-            return stateful.cep_until_stream(
-                spark, files_dir, sf_dir, self._until_expansion(),
-                self.within_us, counted_arg,
-                self.neg_etype if self.neg is not None else None,
-                self.neg_within_us if self.neg is not None else None,
-                entry_idx=self._until_entry_indices(
-                    self.steps, counted_steps),
-            )
-        if self.gap_us is not None:
-            # r13: gap-bounded patterns stream with per-level (ts,
-            # start) BUFFERS bounded by one gap horizon — the bound's
-            # inherent memory (see stateful._cep_gap_fn). The batch
-            # compile's gap refusals are re-checked HERE because this
-            # branch returns before compile()-equivalent validation
-            # runs — without them the refused compositions would
-            # stream silently wrong (review r13): a counted step would
-            # stream the collapsed chain (the exact unsoundness batch
-            # refuses), a negated gap would be ignored ( _cep_gap_fn
-            # carries no gate), a skip strategy would emit every
-            # overlapping match.
-            if any(s.one_or_more or s.up_to is not None
-                   for s in self.steps):
-                raise ValueError(
-                    "oneOrMore/times(n, m) do not compose with "
-                    "within(..., 'previous_and_current') — the batch "
-                    "compile refuses the same combination"
-                )
-            # r15 (r14 verdict items 3/4): mid-pattern negation under
-            # the gap bound composes with EVERYTHING ELSE that gap
-            # bounds admit — the count-gated buffers ride the plain
-            # chain (_gap_hits, r14), the position-struct skip chain
-            # (_gap_skip_hits), every 2^k enum variant, and the
-            # watermark hold (feasibility is causal at the match
-            # row) — so no midneg composition refusal remains here;
-            # the batch/stream support matrices are identical.
-            if self.skip != "no_skip":
-                # r14 continuation: skip+gap STREAMS — the buffered
-                # carry generalizes to (h, sp[, ap]) position structs
-                # and the acceptance cursor is causal
-                # (stateful._cep_gap_skip_fn). With a terminal
-                # negation on top, candidates hold until the
-                # watermark passes their deadline and the cursor
-                # folds at flush time over the SURVIVORS, in match
-                # order (deadlines are nondecreasing) — exactly the
-                # batch fold-after-negation-filter
-                # (stateful._cep_gap_skip_neg_fn)
-                if any(s.optional for s in self.steps):
-                    raise ValueError(
-                        "after_match_skip does not compose with "
-                        "optional steps (the batch compile refuses "
-                        "the same combination)"
-                    )
-                anchor_idx = self._skip_anchor_idx()
-                if self.neg is not None:
-                    if self.neg_etype is None:
-                        raise ValueError(
-                            "the terminal negation was built from a "
-                            "Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
-                    return stateful.cep_gap_skip_neg_stream(
-                        spark, files_dir, sf_dir,
-                        self._event_expansion(self.steps),
-                        self.within_us, self.gap_us, self.skip,
-                        anchor_idx, self.neg_etype, self.neg_within_us,
-                    )
-                return stateful.cep_gap_skip_stream(
-                    spark, files_dir, sf_dir,
-                    self._event_expansion(self.steps), self.within_us,
-                    self.gap_us, self.skip, anchor_idx,
-                )
-            if any(s.optional for s in self.steps):
-                # r14 (r13 verdict item 4b): optional-under-gap
-                # streams as the SAME 2^k include/exclude variant set
-                # the batch compile enumerates — one gap-buffered
-                # chain per variant in one keyed state tuple, OR-gated
-                # emission with greedy max-start and with_<name> flags
-                # (stateful._cep_gap_enum_fn). With a terminal
-                # negation on top (the triple composition), the enum
-                # candidates feed the watermark-delayed hold instead
-                # (stateful._cep_gap_enum_neg_fn).
-                if self.steps[-1].optional:
-                    raise ValueError(
-                        "the final step cannot be optional — it "
-                        "anchors the match row"
-                    )
-                opts = [(i, s) for i, s in enumerate(self.steps)
-                        if s.optional]
-                if len(opts) > 6:
-                    raise ValueError(
-                        f"{len(opts)} optional steps under a gap "
-                        f"bound would run {2 ** len(opts)} buffered "
-                        "variant machines — cap is 6 (64 chains)"
-                    )
-                variant_steps, incl = [], []
-                for mask in range(1 << len(opts)):
-                    inc = {i for j, (i, _s) in enumerate(opts)
-                           if mask >> j & 1}
-                    chain = [s for i, s in enumerate(self.steps)
-                             if not s.optional or i in inc]
-                    variant_steps.append(self._event_expansion(chain))
-                    incl.append(frozenset(
-                        f"with_{s.name}" for i, s in opts if i in inc
-                    ))
-                flag_names = [f"with_{s.name}" for _i, s in opts]
-                if self.neg is not None:
-                    if self.neg_etype is None:
-                        raise ValueError(
-                            "the terminal negation was built from a "
-                            "Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
-                    return stateful.cep_gap_enum_neg_stream(
-                        spark, files_dir, sf_dir, variant_steps,
-                        self.within_us, self.gap_us, incl, flag_names,
-                        self.neg_etype, self.neg_within_us,
-                    )
-                return stateful.cep_gap_enum_stream(
-                    spark, files_dir, sf_dir, variant_steps,
+            elif has_opt:
+                # optional-under-gap: every 2^k include/exclude variant
+                # runs its own gap-buffered chain
+                lists, incl = self._optional_variants()
+                machine = stateful._cep_gap_enum_fn(
+                    [self._event_expansion(v) for v in lists],
                     self.within_us, self.gap_us, incl, flag_names,
                 )
-            if self.neg is not None:
-                # r14 (r13 verdict item 4a): terminal negation + gap
-                # bound streams as the watermark-delayed hold COMPOSED
-                # with the horizon-pruned buffered carry
-                # (stateful._cep_gap_neg_fn)
-                if self.neg_etype is None:
-                    raise ValueError(
-                        "the terminal negation was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-                return stateful.cep_gap_negation_stream(
-                    spark, files_dir, sf_dir,
-                    self._event_expansion(self.steps), self.within_us,
-                    self.gap_us, self.neg_etype, self.neg_within_us,
-                )
-            return stateful.cep_gap_bound_stream(
-                spark, files_dir, sf_dir,
-                self._event_expansion(self.steps), self.within_us,
-                self.gap_us,
+            else:
+                machine = stateful._cep_gap_fn(
+                    steps, self.within_us, self.gap_us, nn_ets)
+        elif self.skip != "no_skip":
+            need_two(steps)
+            machine = stateful._cep_skip_fn(
+                steps, self.within_us, self.skip, self._skip_anchor_idx(),
+                nn_ets,
             )
-        if self.neg is not None:
-            # TERMINAL negation streams via watermark-delayed emission
-            # (r13, r12 verdict item 4): candidates held in keyed state
-            # until the watermark passes match_ts + T, killed on a
-            # negated arrival in the open interval. The annotation
-            # surfaces don't compose here (the batch next_<neg>_ts
-            # audit column is unbounded-lookahead by definition).
-            has_opt = any(s.optional for s in self.steps)
-            has_cnt = any(s.one_or_more or s.up_to is not None
-                          for s in self.steps)
-            if has_opt or has_cnt:
-                # r14 continuation: annotation flags and repetition
-                # counts are CAUSAL (they evaluate at the match row),
-                # so they ride the watermark-held candidate
-                # (stateful._cep_compiled_neg_fn); only the 2^k
-                # strict-optional enumeration and the both-strict
-                # OR-split stay batch-only under terminal negation
-                if self.skip != "no_skip":
-                    raise ValueError(
-                        "after_match_skip does not compose with "
-                        "optional()/oneOrMore()/times(n, m) "
-                        "annotations (the batch compile refuses the "
-                        "same combination)"
-                    )
-                if self._needs_variant_enum():
-                    # r15 (r14 verdict item 3): strict-contiguity
-                    # optional regions × terminal negation stream —
-                    # the 2^k enum machine's OR-gated emission is
-                    # causal at the match row, so it feeds the same
-                    # watermark-delayed hold as every other
-                    # neg composite (stateful._cep_enum_neg_fn)
-                    if has_cnt:
-                        raise ValueError(
-                            "repetition counts do not compose with "
-                            "optional steps in a strict-contiguity "
-                            "region (the batch compile refuses the "
-                            "same combination)"
-                        )
-                    if self.steps and self.steps[-1].optional:
-                        raise ValueError(
-                            "the final step cannot be optional — it "
-                            "anchors the match row"
-                        )
-                    if self.neg_etype is None:
-                        raise ValueError(
-                            "the terminal negation was built from a "
-                            "Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
-                    opts = [(i, s) for i, s in enumerate(self.steps)
-                            if s.optional]
-                    if len(opts) > 6:
-                        raise ValueError(
-                            f"{len(opts)} optional steps under strict "
-                            "contiguity would enumerate "
-                            f"{2 ** len(opts)} variant chains — cap "
-                            "is 6"
-                        )
-                    masks, variant_steps = [], []
-                    for mask in range(1 << len(opts)):
-                        inc = {i for j, (i, _s) in enumerate(opts)
-                               if mask >> j & 1}
-                        chain = [s for i, s in enumerate(self.steps)
-                                 if not s.optional or i in inc]
-                        variant_steps.append(
-                            self._event_expansion(chain))
-                        masks.append(frozenset(
-                            f"with_{s.name}" for i, s in opts
-                            if i in inc
-                        ))
-                    flag_names = [f"with_{s.name}" for _i, s in opts]
-                    return stateful.cep_enum_neg_stream(
-                        spark, files_dir, sf_dir, variant_steps,
-                        self.within_us, masks, flag_names,
-                        self.neg_etype, self.neg_within_us,
-                    )
-                req = [s for s in self.steps if not s.optional]
-                split = [
-                    s for i, st_ in enumerate(req)
-                    for s in [st_]
-                    if (st_.contiguity == "next" and st_.times == 1
-                        and (st_.one_or_more
-                             or (st_.up_to is not None
-                                 and st_.up_to >= 2))
-                        and i + 1 < len(req)
-                        and req[i + 1].contiguity == "next")
-                ]
-                if split:
-                    # r15 (r14 verdict item 3): the both-strict
-                    # OR-split × terminal negation streams — the
-                    # 2^|split| variant machines' lexicographic
-                    # winner and pools are causal at the match row,
-                    # so they feed the watermark hold
-                    # (stateful._cep_or_split_neg_fn)
-                    if any(s.optional for s in self.steps):
-                        raise ValueError(
-                            "optional() does not compose with a "
-                            "both-strict oneOrMore/times(1, m) step "
-                            "(the batch compile refuses the same "
-                            "combination)"
-                        )
-                    if len(split) > 3:
-                        raise ValueError(
-                            f"{len(split)} both-strict "
-                            "oneOrMore/times(1, m) steps would "
-                            f"enumerate {2 ** len(split)} OR-variant "
-                            "chains — cap is 3"
-                        )
-                    if self.neg_etype is None:
-                        raise ValueError(
-                            "the terminal negation was built from a "
-                            "Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
-                    counted_steps = [s for s in self.steps
-                                     if s.one_or_more
-                                     or s.up_to is not None]
-                    for c in counted_steps:
-                        if c.etype is None:
-                            raise ValueError(
-                                f"counted step {c.name!r} was built "
-                                "from a Column predicate — declare "
-                                "it with etype=... to compile for "
-                                "streaming"
-                            )
-                    variant_steps = []
-                    for mask in range(1 << len(split)):
-                        var = []
-                        for s in req:
-                            if s in split:
-                                j = split.index(s)
-                                var.append(
-                                    replace(s, times=2)
-                                    if mask >> j & 1
-                                    else replace(s, one_or_more=False,
-                                                 times=1, up_to=None)
-                                )
-                            else:
-                                var.append(s)
-                        variant_steps.append(self._event_expansion(var))
-                    return stateful.cep_or_split_neg_stream(
-                        spark, files_dir, sf_dir, variant_steps,
-                        self.within_us,
-                        [(c.name, c.etype, c.up_to)
-                         for c in counted_steps],
-                        self.neg_etype, self.neg_within_us,
-                    )
-                if self.steps and self.steps[-1].optional:
-                    raise ValueError(
-                        "the final step cannot be optional — it "
-                        "anchors the match row"
-                    )
-                if self.neg_etype is None:
-                    raise ValueError(
-                        "the terminal negation was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-                counted_steps = [s for s in self.steps
-                                 if s.one_or_more or s.up_to is not None]
-                for c in counted_steps:
-                    if c.etype is None:
-                        raise ValueError(
-                            f"counted step {c.name!r} was built from "
-                            "a Column predicate — declare it with "
-                            "etype=... to compile for streaming"
-                        )
-                main = self._event_expansion(req)
-                variants = [
+        elif has_nn:
+            need_two(steps)
+            machine = stateful._cep_not_next_fn(
+                steps, self.within_us, cnt, nn_ets)
+        elif split:
+            machine = stateful._cep_or_split_fn(
+                [(None, self._event_expansion(v))
+                 for v in self._split_variants(req, split)],
+                self.within_us, cnt,
+            )
+        elif has_opt and self._needs_variant_enum():
+            # strict-contiguity optional region: every chain is one of
+            # the 2^k variants, OR-gated with greedy max-start
+            lists, incl = self._optional_variants()
+            machine = stateful._cep_compiled_fn(
+                [(None, self._event_expansion(v)) for v in lists],
+                self.within_us, enum=(incl, flag_names),
+            )
+        else:
+            need_two(self._event_expansion(req))
+            machine = stateful._cep_compiled_fn(
+                [(None, self._event_expansion(req))] + [
                     (f"with_{o.name}", self._event_expansion(
-                        [s for s in self.steps
-                         if not s.optional or s is o]))
-                    for o in (s for s in self.steps if s.optional)
-                ]
-                return stateful.cep_compiled_neg_stream(
-                    spark, files_dir, sf_dir, main, self.within_us,
-                    variants,
-                    [(c.name, c.etype, c.up_to)
-                     for c in counted_steps],
-                    self.neg_etype, self.neg_within_us,
-                )
-            if self.skip != "no_skip":
-                # r14 continuation: skip × terminal negation streams —
-                # the causal position-struct carries feed the
-                # watermark hold, and the acceptance cursor folds at
-                # flush time over the survivors in match order
-                # (stateful._cep_skip_neg_fn)
-                if self.neg_etype is None:
-                    raise ValueError(
-                        "the terminal negation was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-                return stateful.cep_skip_neg_stream(
-                    spark, files_dir, sf_dir,
-                    self._event_expansion(self.steps), self.within_us,
-                    self.skip, self._skip_anchor_idx(),
-                    self.neg_etype, self.neg_within_us,
-                )
-            if self.neg_etype is None:
-                raise ValueError(
-                    "the terminal negation was built from a Column "
-                    "predicate — declare it with etype=... to compile "
-                    "for streaming"
-                )
-            return stateful.cep_terminal_negation_stream(
-                spark, files_dir, sf_dir,
-                self._event_expansion(self.steps), self.within_us,
-                self.neg_etype, self.neg_within_us,
+                        [s for s in self.steps if not s.optional or s is o]))
+                    for o in self.steps if o.optional
+                ],
+                self.within_us, counted=cnt,
             )
-        if self._needs_variant_enum():
-            # r13: the strict-contiguity optional region streams as the
-            # same 2^k variant-chain set the batch compile enumerates —
-            # every variant is an ordinary carry chain in keyed state;
-            # emission OR-gates across variants with greedy max-start
-            # (see stateful._cep_compiled_fn's enum mode)
-            if any(s.one_or_more or s.up_to is not None
-                   for s in self.steps):
-                raise ValueError(
-                    "repetition counts do not compose with optional "
-                    "steps in a strict-contiguity region (the batch "
-                    "compile refuses the same combination)"
-                )
-            if self.skip != "no_skip":
-                raise ValueError(
-                    "after_match_skip does not compose with optional "
-                    "steps (the batch compile refuses the same "
-                    "combination)"
-                )
-            opts = [(i, s) for i, s in enumerate(self.steps)
-                    if s.optional]
-            if len(opts) > 6:
-                raise ValueError(
-                    f"{len(opts)} optional steps under strict "
-                    "contiguity would enumerate "
-                    f"{2 ** len(opts)} variant chains — cap is 6"
-                )
-            masks, variant_steps = [], []
-            for mask in range(1 << len(opts)):
-                inc = {i for j, (i, _s) in enumerate(opts)
-                       if mask >> j & 1}
-                chain = [s for i, s in enumerate(self.steps)
-                         if not s.optional or i in inc]
-                variant_steps.append(self._event_expansion(chain))
-                masks.append(frozenset(
-                    f"with_{s.name}" for i, s in opts if i in inc
-                ))
-            flag_names = [f"with_{s.name}" for _i, s in opts]
-            # the all-include variant (longest) carries the >=2-step
-            # sanity check; the enum chains drive everything else
-            return stateful.cep_compiled_stream(
-                spark, files_dir, sf_dir, variant_steps[-1],
-                self.within_us,
-                enum=(masks, variant_steps, flag_names),
-            )
-        required = [s for s in self.steps if not s.optional]
-        split = [
-            s for i, s in enumerate(required)
-            if s.contiguity == "next" and s.times == 1
-            and (s.one_or_more or (s.up_to is not None and s.up_to >= 2))
-            and i + 1 < len(required)
-            and required[i + 1].contiguity == "next"
-        ]
-        if split:
-            # r14: the both-strict oneOrMore/times(1, m) OR-split
-            # streams as one paired carry chain per quantifier variant
-            # (stateful._cep_or_split_fn), sharing the running counts —
-            # the same chain set the batch compile builds
-            if any(s.optional for s in self.steps):
-                raise ValueError(
-                    "optional() does not compose with a both-strict "
-                    "oneOrMore/times(1, m) step (the batch compile "
-                    "refuses the same combination)"
-                )
-            if self.skip != "no_skip":
-                raise ValueError(
-                    "after_match_skip does not compose with "
-                    "oneOrMore/times(n, m) annotations (the batch "
-                    "compile refuses the same combination)"
-                )
-            if len(split) > 3:
-                raise ValueError(
-                    f"{len(split)} both-strict oneOrMore/times(1, m) "
-                    "steps would enumerate "
-                    f"{2 ** len(split)} OR-variant chains — cap is 3"
-                )
-            counted = [s for s in self.steps
-                       if s.one_or_more or s.up_to is not None]
-            for c in counted:
-                if c.etype is None:
-                    raise ValueError(
-                        f"counted step {c.name!r} was built from a "
-                        "Column predicate — declare it with etype=... "
-                        "to compile for streaming"
-                    )
-            variant_steps = []
-            for mask in range(1 << len(split)):
-                var = []
-                for s in required:
-                    if s in split:
-                        j = split.index(s)
-                        var.append(
-                            replace(s, times=2)
-                            if mask >> j & 1
-                            else replace(s, one_or_more=False,
-                                         times=1, up_to=None)
-                        )
-                    else:
-                        var.append(s)
-                variant_steps.append(self._event_expansion(var))
-            return stateful.cep_or_split_stream(
-                spark, files_dir, sf_dir, variant_steps,
-                self.within_us,
-                [(c.name, c.etype, c.up_to) for c in counted],
-            )
-        main, variants = self.stream_chains()
-        counted = [s for s in self.steps
-                   if s.one_or_more or s.up_to is not None]
-        if counted and self.skip != "no_skip":
-            raise ValueError(
-                f"after_match_skip({self.skip!r}) does not "
-                "compose with oneOrMore/times(n, m) annotations "
-                "(the batch compile refuses the same combination)"
-            )
-        anchor_idx = None
-        if self.skip in ("skip_to_first", "skip_to_last"):
-            # expanded index of the anchor copy (first/last times-copy
-            # of the named step) — the streaming carry stamps its ap
-            # there, mirroring the batch struct's stamp_anchor hop
-            required = [s for s in self.steps if not s.optional]
-            if self.skip_step not in [s.name for s in required]:
-                raise ValueError(
-                    f"after_match_skip anchor step {self.skip_step!r} "
-                    "is not a pattern step"
-                )
-            if self.skip_step == required[0].name:
-                raise ValueError(
-                    "the after_match_skip anchor may not be the begin "
-                    "step — use skip_to_next"
-                )
-            idx = 0
-            for s in required:
-                for k in range(s.times):
-                    if s.name == self.skip_step and (
-                        k == 0 if self.skip == "skip_to_first"
-                        else k == s.times - 1
-                    ):
-                        anchor_idx = idx
-                    idx += 1
-        return stateful.cep_compiled_stream(
-            spark, files_dir, sf_dir, main, self.within_us,
-            flag_variants=variants,
-            skip=self.skip,
-            anchor_idx=anchor_idx,
-            counted=[(c.name, c.etype, c.up_to) for c in counted],
-        )
+        # the hold attaches to any machine (neg_etype is set exactly
+        # under a terminal negation); the cursor, if any, is part of the
+        # position-struct machine
+        fn = stateful._cep_keyed_fn(machine, self.neg_etype,
+                                    self.neg_within_us)
+        return stateful.cep_compiled_stream(spark, files_dir, sf_dir, fn)
 
     def _check_open(self, name: str) -> None:
         if not self.steps:
@@ -3345,7 +2801,7 @@ def stream_cep_both_strict_one_or_more(
     tests/test_properties.py. Same one-exchange chained-Window plan;
     the second chain is two more window columns, not a new shuffle.
     STREAMS too (r14): compile_stream routes to the 2-variant paired
-    keyed machine (stateful.cep_or_split_stream — shared running
+    keyed machine (stateful._cep_or_split_fn — shared running
     counts, lexicographic winner), twin pytest bit-equal across
     micro-batch boundaries incl. fake-GroupState fuzz."""
     pat = (
@@ -3757,10 +3213,10 @@ def stream_cep_within_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded GREATEST (stream_cep_skip_gap). r14:
     the gap compositions STREAM too — optional-under-gap as 2^k
     gap-buffered variant machines (stateful._cep_gap_enum_fn),
-    terminal-negation+gap as the watermark hold over the buffered
-    carry (stateful._cep_gap_neg_fn), and even the triple
-    optional+negation+gap (the enum machines feeding the hold,
-    stateful._cep_gap_enum_neg_fn); twin pytests are bit-equal
+    terminal-negation+gap as the buffered carry
+    (stateful._cep_gap_fn) with the keyed shell's terminal-negation
+    hold attached, and even the triple optional+negation+gap (the enum
+    machines with the same hold attached); twin pytests are bit-equal
     across micro-batch boundaries incl. fake-GroupState fuzz. The
     oracle unrolls the identical bounded carries; brute-force fuzz
     incl. same-second ties and both-bounds-active patterns is in
@@ -4463,7 +3919,8 @@ def stream_cep_or_split_neg(
     negated/positive types: test_cep_or_split_neg_fuzz. STREAMS (r15:
     the 2-variant paired keyed machine's winner and pools are causal
     at the match row, so they ride the watermark-delayed hold —
-    stateful._cep_or_split_neg_fn; twin contract = the match set
+    stateful._cep_or_split_fn with the keyed shell's hold attached;
+    twin contract = the match set
     without the audit column; fake-timer-GroupState fuzz +
     availableNow twin in tests)."""
     pat = (
@@ -4545,7 +4002,8 @@ def stream_cep_next_optional_neg(
     unroll. Brute-force fuzz: test_cep_enum_neg_fuzz. STREAMS (r15:
     the enum machine's OR-gated emission and flags are causal at the
     match row, so they ride the watermark-delayed hold —
-    stateful._cep_enum_neg_fn; fake-timer-GroupState fuzz +
+    stateful._cep_compiled_fn's enum mode with the keyed shell's hold
+    attached; fake-timer-GroupState fuzz +
     availableNow twin in tests)."""
     pat = (
         CepPattern.begin("view", etype="view")

@@ -1476,6 +1476,17 @@ def test_tv_stats_footer_matches_spark_agg_and_falls_back(spark, tmp_path):
     ent = _tv_with_stats(spark, [nostats], "k1")[0]
     assert (ent["min_key"], ent["max_key"]) == (3, 9)
 
+    # (b2) a non-integer key column => footer path refuses even though
+    # statistics exist (only integer footer stats are known exact),
+    # and the Spark fallback serves the bounds
+    dblkey = os.path.join(str(tmp_path), "dblkey.parquet")
+    pq.write_table(pa.table({"k1": pa.array([7.0, 3.0, 9.0])}), dblkey)
+    md = pq.ParquetFile(dblkey).metadata
+    assert md.row_group(0).column(0).statistics.has_min_max
+    assert _pq_footer_stats(dblkey, ["k1"]) is None
+    ent = _tv_with_stats(spark, [dblkey], "k1")[0]
+    assert (ent["min_key"], ent["max_key"]) == (3, 9)
+
     # (c) zero-row file rejected loudly on both paths
     empty = os.path.join(str(tmp_path), "empty.parquet")
     pq.write_table(pa.table({"k1": pa.array([], pa.int64())}), empty)

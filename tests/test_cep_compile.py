@@ -1111,9 +1111,84 @@ def test_terminal_negation_streaming_twin(spark, sf_small,
     pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
 
 
+def test_terminal_negation_checkpoint_restart(spark, sf_small,
+                                              tmp_path_factory):
+    """A terminal-negation twin survives a restart from its checkpoint:
+    the first run replays only the first file, so its candidates are
+    still held in the hold's pend_* state when the query stops; the
+    restart replays every file from the same checkpoint. The union of
+    the file sink's rows must equal a one-shot run and the batch
+    compile() — no held candidate lost, none emitted twice."""
+    import os
+    import shutil
+
+    from sparkflow.streaming import stateful
+
+    base = str(tmp_path_factory.mktemp("cep_tneg_restart"))
+    full = stateful.split_events_to_files(spark, sf_small, base, 3)
+    _append_flush_files(spark, full)
+    pat = (
+        CepPattern.begin("view", etype="view")
+        .followed_by("click", etype="click")
+        .within("36 hours")
+        .not_followed_by("error", etype="error", within="12 hours")
+    )
+    live = os.path.join(base, "live")
+    os.makedirs(live)
+    names = sorted(f for f in os.listdir(full) if f.endswith(".parquet"))
+    ckpt, sink = os.path.join(base, "ckpt"), os.path.join(base, "sink")
+
+    def run(batch_names):
+        for f in batch_names:  # copy2 keeps the replay-order mtimes
+            shutil.copy2(os.path.join(full, f), os.path.join(live, f))
+        q = (
+            pat.compile_stream(spark, live, sf_small)
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q.lastProgress
+
+    cols = ["user_id", "match_id", "match_us", "start_us"]
+    last = run(names[:1])
+    assert last["stateOperators"][0]["numRowsTotal"] > 0
+    held = (
+        spark.read.format("statestore").load(ckpt)
+        .selectExpr("size(value.groupState.pend_mid) AS n")
+        .agg(F.sum("n")).first()[0]
+    )
+    assert held > 0, "the first run left no candidate held"
+    run(names[1:])
+    got = (
+        spark.read.parquet(sink).select(*cols).toPandas()
+        .sort_values("match_id").reset_index(drop=True)
+    )
+    stateful.run_to_memory(pat.compile_stream(spark, full, sf_small),
+                           "t_ceptneg_oneshot")
+    oneshot = (
+        spark.table("t_ceptneg_oneshot").select(*cols).toPandas()
+        .sort_values("match_id").reset_index(drop=True)
+    )
+    want = pat.compile(table(spark, sf_small, "events")).toPandas()
+    want = want.assign(
+        match_us=pd.to_datetime(want["match_ts"])
+        .astype("datetime64[us]").astype("int64"),
+        start_us=pd.to_datetime(want["start_ts"])
+        .astype("datetime64[us]").astype("int64"),
+    )[cols].sort_values("match_id").reset_index(drop=True)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, oneshot, check_dtype=False)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
 class _FakeTimerState:
     """GroupState stand-in with event-time-timer surface for driving
-    _cep_terminal_neg_fn across hand-built micro-batches."""
+    the keyed shell's terminal-negation hold across hand-built
+    micro-batches."""
 
     def __init__(self):
         self._v = None
@@ -1148,12 +1223,13 @@ def test_terminal_negation_late_kill_hand_case():
     timestamp (open interval), and the trailing survivor must emit on
     the event-time TIMER, not only on the data path. Pattern A→B,
     notFollowedBy X within 60 s."""
-    from sparkflow.streaming.stateful import _cep_terminal_neg_fn
+    from sparkflow.streaming.stateful import _cep_compiled_fn, _cep_keyed_fn
 
     steps = [("A", "begin", None), ("B", "followed_by", None)]
 
     def run(batches, wms, fire_at_ms):
-        fn = _cep_terminal_neg_fn(steps, None, "X", 60_000_000)
+        fn = _cep_keyed_fn(_cep_compiled_fn([(None, steps)], None), "X",
+                           60_000_000)
         st = _FakeTimerState()
         got = []
         for batch, wm in zip(batches, wms):
@@ -1226,6 +1302,76 @@ def test_enum_variant_streaming_twin(spark, sf_small, tmp_path_factory):
         .astype("datetime64[us]").astype("int64"),
     )[["user_id", "match_id", "match_us", "start_us", "with_click"]]
     pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
+
+
+@pytest.mark.parametrize(
+    "route", ["enum", "gap_enum", "enum_held", "gap_one_step_held"])
+def test_short_variant_chains_stream(spark, sf_small, tmp_path_factory,
+                                     route):
+    """Machines that run variant chains shorter than two steps stream
+    them: an optional begin step before a single required step (m=2,
+    so the exclude variant has ONE step) through the 2^k enumeration,
+    plain, gap-bounded and under a terminal-negation hold; and a
+    one-step gap-bounded pattern under the hold. Each must equal the
+    batch compile's matches, starts and flags."""
+    from sparkflow.streaming import stateful
+
+    stream_dir = stateful.split_events_to_files(
+        spark, sf_small, str(tmp_path_factory.mktemp(f"cep_{route}")), 3
+    )
+    if route == "gap_one_step_held":
+        pat = CepPattern.begin("view", etype="view")
+    else:
+        pat = CepPattern.begin("click", etype="click").optional()
+        pat = (pat.next("purchase", etype="purchase") if "gap" not in route
+               else pat.followed_by("purchase", etype="purchase"))
+    if "gap" in route:
+        pat = pat.within("30 minutes", "previous_and_current")
+    if route.endswith("held"):
+        pat = pat.not_followed_by("stop", etype="view" if "enum" in route
+                                  else "purchase", within="30 minutes")
+        _append_flush_files(spark, stream_dir)
+    sdf = pat.compile_stream(spark, stream_dir, sf_small)
+    stateful.run_to_memory(sdf, f"t_short_{route}", "append")
+    got = (
+        spark.table(f"t_short_{route}").toPandas()
+        .sort_values(["user_id", "match_id"]).reset_index(drop=True)
+    )
+    want = (
+        pat.compile(table(spark, sf_small, "events")).toPandas()
+        .sort_values(["user_id", "match_id"]).reset_index(drop=True)
+    )
+    assert len(want) > 0
+    if "enum" in route:
+        assert want["with_click"].any() and not want["with_click"].all()
+    want_us = want.assign(
+        match_us=pd.to_datetime(want["match_ts"])
+        .astype("datetime64[us]").astype("int64"),
+        start_us=pd.to_datetime(want["start_ts"])
+        .astype("datetime64[us]").astype("int64"),
+    )[list(got.columns)]
+    pd.testing.assert_frame_equal(got, want_us, check_dtype=False)
+
+
+def test_compile_stream_refuses_unfinished_mid_negation(spark):
+    """A mid-pattern notFollowedBy with no following step is refused by
+    compile_stream on every machine route, as the batch compile refuses
+    it — never streamed with the negation silently dropped."""
+    pats = [
+        CepPattern.begin("a", etype="A").followed_by("b", etype="B"),
+        CepPattern.begin("a", etype="A").followed_by("b", etype="B")
+        .within("1 hour", "previous_and_current"),
+        CepPattern.begin("a", etype="A").optional()
+        .next("b", etype="B"),
+        CepPattern.begin("a", etype="A").followed_by("b", etype="B")
+        .after_match_skip("skip_past_last_event"),
+    ]
+    for pat in pats:
+        pend = pat.not_followed_by("x", etype="X")
+        with pytest.raises(ValueError, match="positive followed_by"):
+            pend.compile(None)
+        with pytest.raises(ValueError, match="positive followed_by"):
+            pend.compile_stream(None, "/x", "/x")
 
 
 def test_gap_bound_plan_single_exchange(spark, sf_small):
@@ -2240,7 +2386,7 @@ def test_until_prefix_pool_entry_relative(spark):
     Both batch and the streaming machine (entry_idx threading)."""
     import pandas as pd
 
-    from sparkflow.streaming.stateful import _cep_until_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_until_fn
 
     # a U x b c : the stop precedes the loop entry x -> pool must be 1
     df = spark.createDataFrame(
@@ -2263,11 +2409,11 @@ def test_until_prefix_pool_entry_relative(spark):
     # the streaming machine agrees (entry_idx = [1])
     cnt_steps = [s for s in pat.steps
                  if s.one_or_more or s.up_to is not None]
-    fn = _cep_until_fn(
+    fn = _cep_keyed_fn(_cep_until_fn(
         pat._until_expansion(), 100 * 1_000_000,
         [("b", "B", None, "U")],
         entry_idx=pat._until_entry_indices(pat.steps, cnt_steps),
-    )
+    ))
 
     class _S:
         _v = None

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import sys
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -1084,7 +1085,7 @@ def test_cep_two_counted_streaming_state_fuzz(streams, types, cut,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_compiled_fn
+    from sparkflow.streaming.stateful import _cep_compiled_fn, _cep_keyed_fn
 
     t0, t1, t2, t3 = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -1110,10 +1111,10 @@ def test_cep_two_counted_streaming_state_fuzz(streams, types, cut,
 
     main, variants = pat.stream_chains()
     chains = [(None, main)] + [(n, v) for n, v in variants]
-    fn = _cep_compiled_fn(
+    fn = _cep_keyed_fn(_cep_compiled_fn(
         chains, within_s * 1_000_000,
         counted=[("s1", t1, None), ("s2", t2, 3)],
-    )
+    ))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1249,7 +1250,7 @@ def test_cep_enum_streaming_state_fuzz(streams, pattern_types,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_compiled_fn
+    from sparkflow.streaming.stateful import _cep_compiled_fn, _cep_keyed_fn
 
     m = len(pattern_types)
     opt = min(opt_idx, m - 2)
@@ -1293,10 +1294,10 @@ def test_cep_enum_streaming_state_fuzz(streams, pattern_types,
         variant_steps.append(pat._event_expansion(chain))
         masks.append(frozenset(
             f"with_{s.name}" for i, s in opts if i in inc))
-    fn = _cep_compiled_fn(
+    fn = _cep_keyed_fn(_cep_compiled_fn(
         [(None, v) for v in variant_steps], within_s * 1_000_000,
         enum=(masks, [flag]),
-    )
+    ))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1517,7 +1518,7 @@ def test_cep_gap_streaming_state_fuzz(streams, pattern_types,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_fn
+    from sparkflow.streaming.stateful import _cep_gap_fn, _cep_keyed_fn
 
     m = len(pattern_types)
     strict = [False] + [bool(strict_mask >> (i - 1) & 1)
@@ -1542,8 +1543,8 @@ def test_cep_gap_streaming_state_fuzz(streams, pattern_types,
         ).collect()
     }
 
-    fn = _cep_gap_fn(pat._event_expansion(pat.steps), None,
-                     gap_s * 1_000_000)
+    fn = _cep_keyed_fn(_cep_gap_fn(pat._event_expansion(pat.steps), None,
+                                   gap_s * 1_000_000))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1730,7 +1731,7 @@ def test_cep_gap_enum_state_fuzz(streams, types, gap_s, cut):
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_enum_fn
+    from sparkflow.streaming.stateful import _cep_gap_enum_fn, _cep_keyed_fn
 
     a_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -1759,8 +1760,8 @@ def test_cep_gap_enum_state_fuzz(streams, types, gap_s, cut):
         pat._event_expansion(list(pat.steps)),
     ]
     incl = [frozenset(), frozenset({"with_s1"})]
-    fn = _cep_gap_enum_fn(chains, None, gap_s * 1_000_000, incl,
-                          ["with_s1"])
+    fn = _cep_keyed_fn(_cep_gap_enum_fn(chains, None, gap_s * 1_000_000,
+                                        incl, ["with_s1"]))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1800,6 +1801,85 @@ class _FakeTimerGroupState(_FakeGroupState):
         self.timeout_ms = ms
 
 
+def _shell_feed(fn, state, events, wm_ms, key=1):
+    """Drive a compiled-CEP keyed function with one micro-batch of
+    (event_id, event_type, sec) events at watermark `wm_ms`; an empty
+    batch with state.hasTimedOut set takes the timer path. Returns the
+    emitted (match_id, match_us) pairs."""
+    import pandas as pd
+
+    state.wm_ms = wm_ms
+    pdf = pd.DataFrame({
+        "event_id": [e[0] for e in events],
+        "event_type": [e[1] for e in events],
+        "ts": pd.to_datetime([e[2] for e in events], unit="s"),
+    })
+    got = []
+    for out in fn((key,), iter([pdf] if events else []), state):
+        got += list(zip(out["match_id"], out["match_us"]))
+    return got
+
+
+@pytest.mark.parametrize("machine", ["gap", "chain_held"])
+def test_cep_keyed_shell_pre_epoch_guard(machine):
+    """The keyed-state shell's single event-time guard: -1 is every
+    machine's 'no hit yet' sentinel, so a pre-1970 event time must
+    raise instead of silently diverging from the batch compile — for
+    a machine without a hold and for one under a terminal-negation
+    hold — and must leave the key's state untouched."""
+    from sparkflow.streaming.stateful import (
+        _cep_compiled_fn,
+        _cep_gap_fn,
+        _cep_keyed_fn,
+    )
+
+    steps = [("A", "begin", None), ("B", "followed_by", None)]
+    fn = (
+        _cep_keyed_fn(_cep_gap_fn(steps, None, 60_000_000))
+        if machine == "gap"
+        else _cep_keyed_fn(_cep_compiled_fn([(None, steps)], None), "X",
+                           60_000_000)
+    )
+    state = _FakeTimerGroupState()
+    with pytest.raises(ValueError, match="1970-01-01"):
+        _shell_feed(fn, state, [(1, "A", -5), (2, "B", 3)], 0)
+    assert not state.exists
+    # the same rows shifted past the epoch stream normally
+    assert _shell_feed(fn, state, [(1, "A", 5), (2, "B", 13)], 0) == (
+        [(2, 13_000_000)] if machine == "gap" else [])
+
+
+def test_cep_hold_boundary_rules():
+    """The terminal-negation hold's three boundary rules, pinned on the
+    shell directly (A→B, notFollowedBy X within T = 60 s; candidate
+    B@10 s): a negated event at t == match_us does not kill (open
+    interval); no flush while the watermark equals match_us + T (the
+    deadline must be strictly passed); the timer is armed at
+    (min match_us + T) // 1000 + 1 ms."""
+    from sparkflow.streaming.stateful import _cep_compiled_fn, _cep_keyed_fn
+
+    steps = [("A", "begin", None), ("B", "followed_by", None)]
+    fn = _cep_keyed_fn(_cep_compiled_fn([(None, steps)], None), "X",
+                       60_000_000)
+    state = _FakeTimerGroupState()
+    # X at the candidate's own timestamp: held, not killed
+    assert _shell_feed(fn, state,
+                       [(0, "A", 0), (1, "B", 10), (2, "X", 10)], 0) == []
+    assert state.timeout_ms == (10_000_000 + 60_000_000) // 1000 + 1
+    # watermark exactly at the deadline: still held, timer re-armed
+    state.hasTimedOut = True
+    assert _shell_feed(fn, state, [], 70_000) == []
+    assert state.timeout_ms == 70_001
+    # one ms past the deadline: the survivor flushes on the timer
+    assert _shell_feed(fn, state, [], 70_001) == [(1, 10_000_000)]
+    # a second candidate killed by X at the horizon's closed end
+    state.hasTimedOut = False
+    assert _shell_feed(fn, state, [(3, "A", 100), (4, "B", 110),
+                                   (5, "X", 170)], 80_000) == []
+    state.hasTimedOut = True
+    assert _shell_feed(fn, state, [], 10 ** 9) == []
+
+
 @settings(max_examples=8, deadline=None)
 @given(
     streams=st.lists(
@@ -1817,8 +1897,8 @@ class _FakeTimerGroupState(_FakeGroupState):
 )
 def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
     """Terminal negation + gap bound STREAMS (r14, r13 verdict item
-    4a): driving _cep_gap_neg_fn (horizon-pruned buffers + watermark-
-    delayed hold) through a fake timer GroupState with a random
+    4a): driving _cep_gap_fn (horizon-pruned buffers) in the keyed
+    shell's watermark-delayed hold through a fake timer GroupState with a random
     micro-batch split — watermark advancing to each batch's max event
     time, final survivors flushed by an event-time timer — must emit
     exactly the batch compile's match set, including kills across the
@@ -1827,7 +1907,7 @@ def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_neg_fn
+    from sparkflow.streaming.stateful import _cep_gap_fn, _cep_keyed_fn
 
     a_t, b_t, x_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -1849,10 +1929,9 @@ def test_cep_gap_negation_state_fuzz(streams, types, gap_s, neg_s, cut):
         ).collect()
     }
 
-    fn = _cep_gap_neg_fn(
+    fn = _cep_keyed_fn(_cep_gap_fn(
         pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-        x_t, neg_s * 1_000_000,
-    )
+    ), x_t, neg_s * 1_000_000)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1909,7 +1988,7 @@ def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
     from dataclasses import replace as dc_replace
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_or_split_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_or_split_fn
 
     a_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -1933,12 +2012,12 @@ def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
           dc_replace(sp, one_or_more=False, times=1, up_to=None),
           pat.steps[2]]
     hi = [pat.steps[0], dc_replace(sp, times=2), pat.steps[2]]
-    fn = _cep_or_split_fn(
+    fn = _cep_keyed_fn(_cep_or_split_fn(
         [(None, pat._event_expansion(lo)),
          (None, pat._event_expansion(hi))],
         within_s * 1_000_000,
         [("b", b_t, cap)],
-    )
+    ))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -1978,15 +2057,15 @@ def test_cep_or_split_streaming_state_fuzz(streams, types, cap,
 )
 def test_cep_gap_enum_neg_state_fuzz(streams, types, gap_s, neg_s, cut):
     """The TRIPLE composition — optional + gap bound + terminal
-    negation — STREAMS (r14): _cep_gap_enum_neg_fn (2^k gap machines
-    feeding the watermark hold) driven through a fake timer GroupState
+    negation — STREAMS (r14): _cep_gap_enum_fn (2^k gap machines)
+    feeding the keyed shell's watermark hold driven through a fake timer GroupState
     with a random micro-batch split must emit exactly the batch
     enum+negation compile's rows incl. flags; negated/positive type
     collisions included."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_enum_neg_fn
+    from sparkflow.streaming.stateful import _cep_gap_enum_fn, _cep_keyed_fn
 
     a_t, b_t, c_t, x_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2014,10 +2093,9 @@ def test_cep_gap_enum_neg_state_fuzz(streams, types, gap_s, neg_s, cut):
         pat._event_expansion(list(pat.steps)),
     ]
     incl = [frozenset(), frozenset({"with_s1"})]
-    fn = _cep_gap_enum_neg_fn(
+    fn = _cep_keyed_fn(_cep_gap_enum_fn(
         chains, None, gap_s * 1_000_000, incl, ["with_s1"],
-        x_t, neg_s * 1_000_000,
-    )
+    ), x_t, neg_s * 1_000_000)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2143,7 +2221,7 @@ def test_cep_gap_skip_state_fuzz(streams, types, gap_s, strategy, cut):
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_skip_fn
+    from sparkflow.streaming.stateful import _cep_gap_skip_fn, _cep_keyed_fn
 
     a_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2171,10 +2249,10 @@ def test_cep_gap_skip_state_fuzz(streams, types, gap_s, strategy, cut):
         ).collect()
     }
 
-    fn = _cep_gap_skip_fn(
+    fn = _cep_keyed_fn(_cep_gap_skip_fn(
         pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
         strategy, anchor_idx,
-    )
+    ))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2226,8 +2304,9 @@ def test_cep_skip_neg_state_fuzz(streams, types, neg_s, strategy,
 
     from sparkflow.streaming.cep import CepPattern
     from sparkflow.streaming.stateful import (
-        _cep_gap_skip_neg_fn,
-        _cep_skip_neg_fn,
+        _cep_gap_skip_fn,
+        _cep_keyed_fn,
+        _cep_skip_fn,
     )
 
     a_t, b_t, x_t = types
@@ -2256,15 +2335,15 @@ def test_cep_skip_neg_state_fuzz(streams, types, neg_s, strategy,
     }
 
     if gapped:
-        fn = _cep_gap_skip_neg_fn(
+        fn = _cep_keyed_fn(_cep_gap_skip_fn(
             pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-            strategy, anchor_idx, x_t, neg_s * 1_000_000,
-        )
+            strategy, anchor_idx, None,
+        ), x_t, neg_s * 1_000_000)
     else:
-        fn = _cep_skip_neg_fn(
+        fn = _cep_keyed_fn(_cep_skip_fn(
             pat._event_expansion(pat.steps), None, strategy,
-            anchor_idx, x_t, neg_s * 1_000_000,
-        )
+            anchor_idx, None,
+        ), x_t, neg_s * 1_000_000)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2317,7 +2396,7 @@ def test_cep_counted_neg_state_fuzz(streams, types, neg_s, within_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_compiled_neg_fn
+    from sparkflow.streaming.stateful import _cep_compiled_fn, _cep_keyed_fn
 
     a_t, b_t, c_t, x_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2342,12 +2421,11 @@ def test_cep_counted_neg_state_fuzz(streams, types, neg_s, within_s,
     }
 
     required = [s for s in pat.steps if not s.optional]
-    fn = _cep_compiled_neg_fn(
+    fn = _cep_keyed_fn(_cep_compiled_fn(
         [(None, pat._event_expansion(required))],
         within_s * 1_000_000,
         [("b", b_t, None)],
-        x_t, neg_s * 1_000_000,
-    )
+    ), x_t, neg_s * 1_000_000)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2470,7 +2548,7 @@ def test_cep_midneg_gap_streaming_state_fuzz(streams, types, gap_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_fn
+    from sparkflow.streaming.stateful import _cep_gap_fn, _cep_keyed_fn
 
     a_t, x_t, b_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2492,8 +2570,8 @@ def test_cep_midneg_gap_streaming_state_fuzz(streams, types, gap_s,
         ).collect()
     }
 
-    fn = _cep_gap_fn(pat._event_expansion(pat.steps), None,
-                     gap_s * 1_000_000)
+    fn = _cep_keyed_fn(_cep_gap_fn(pat._event_expansion(pat.steps), None,
+                                   gap_s * 1_000_000))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2632,17 +2710,15 @@ def test_cep_midneg_gap_skip_fuzz(streams, types, gap_s, neg_s,
 )
 def test_cep_midneg_gap_skip_state_fuzz(streams, types, gap_s, neg_s,
                                         strategy, with_neg, cut):
-    """midneg+gap+skip STREAMS (r15): _cep_gap_skip_fn /
-    _cep_gap_skip_neg_fn with count-gated position-struct buffers
+    """midneg+gap+skip STREAMS (r15): _cep_gap_skip_fn, with and
+    without the keyed shell's hold, with count-gated position-struct buffers
     driven through a fake (timer) GroupState with a random micro-batch
     split must emit exactly the batch rows, for all three cursor rules
     and with/without the terminal-negation hold."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import (
-        _cep_gap_skip_fn, _cep_gap_skip_neg_fn,
-    )
+    from sparkflow.streaming.stateful import _cep_gap_skip_fn, _cep_keyed_fn
 
     a_t, x_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2675,12 +2751,12 @@ def test_cep_midneg_gap_skip_state_fuzz(streams, types, gap_s, neg_s,
 
     steps = pat._event_expansion(pat.steps)
     if with_neg:
-        fn = _cep_gap_skip_neg_fn(steps, None, gap_s * 1_000_000,
-                                  strategy, anchor_idx, "A",
-                                  neg_s * 1_000_000)
+        fn = _cep_keyed_fn(_cep_gap_skip_fn(steps, None, gap_s * 1_000_000,
+                                            strategy, anchor_idx, None),
+                           "A", neg_s * 1_000_000)
     else:
-        fn = _cep_gap_skip_fn(steps, None, gap_s * 1_000_000,
-                              strategy, anchor_idx)
+        fn = _cep_keyed_fn(_cep_gap_skip_fn(steps, None, gap_s * 1_000_000,
+                                            strategy, anchor_idx))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2796,15 +2872,15 @@ def test_cep_midneg_gap_neg_fuzz(streams, types, gap_s, neg_s):
 )
 def test_cep_midneg_gap_neg_state_fuzz(streams, types, gap_s, neg_s,
                                        cut):
-    """midneg+gap+terminal-neg STREAMS (r15): _cep_gap_neg_fn with the
-    count-gated buffers (bq/qc) driven through a fake timer GroupState
+    """midneg+gap+terminal-neg STREAMS (r15): _cep_gap_fn under the
+    keyed shell's hold with the count-gated buffers (bq/qc) driven through a fake timer GroupState
     with a random micro-batch split must emit exactly the batch match
     set — count gates, kills, and open-interval same-timestamp
     survival all across the batch boundary."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_neg_fn
+    from sparkflow.streaming.stateful import _cep_gap_fn, _cep_keyed_fn
 
     a_t, x_t, b_t, y_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -2827,10 +2903,9 @@ def test_cep_midneg_gap_neg_state_fuzz(streams, types, gap_s, neg_s,
         ).collect()
     }
 
-    fn = _cep_gap_neg_fn(
+    fn = _cep_keyed_fn(_cep_gap_fn(
         pat._event_expansion(pat.steps), None, gap_s * 1_000_000,
-        y_t, neg_s * 1_000_000,
-    )
+    ), y_t, neg_s * 1_000_000)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -2980,17 +3055,15 @@ def test_cep_opt_midneg_gap_fuzz(streams, types, gap_s, neg_s,
 def test_cep_opt_midneg_gap_state_fuzz(streams, types, gap_s, neg_s,
                                        with_neg, cut):
     """The optional×midneg×gap triple (and its terminal-negation
-    quadruple) STREAMS (r15): _cep_gap_enum_fn / _cep_gap_enum_neg_fn
-    with per-variant count-gated buffers driven through a fake (timer)
+    quadruple) STREAMS (r15): _cep_gap_enum_fn, with and without the
+    keyed shell's hold, with per-variant count-gated buffers driven through a fake (timer)
     GroupState with a random micro-batch split must emit exactly the
     batch rows — matches, greedy max-start across variants, the
     with_b flag, and (quadruple) the watermark kills."""
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import (
-        _cep_gap_enum_fn, _cep_gap_enum_neg_fn,
-    )
+    from sparkflow.streaming.stateful import _cep_gap_enum_fn, _cep_keyed_fn
 
     a_t, b_t, x_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -3022,12 +3095,12 @@ def test_cep_opt_midneg_gap_state_fuzz(streams, types, gap_s, neg_s,
     ]
     incl = [frozenset(), frozenset({"with_b"})]
     if with_neg:
-        fn = _cep_gap_enum_neg_fn(chains, None, gap_s * 1_000_000,
-                                  incl, ["with_b"], "B",
-                                  neg_s * 1_000_000)
+        fn = _cep_keyed_fn(_cep_gap_enum_fn(chains, None, gap_s * 1_000_000,
+                                            incl, ["with_b"]),
+                           "B", neg_s * 1_000_000)
     else:
-        fn = _cep_gap_enum_fn(chains, None, gap_s * 1_000_000, incl,
-                              ["with_b"])
+        fn = _cep_keyed_fn(_cep_gap_enum_fn(chains, None, gap_s * 1_000_000,
+                                            incl, ["with_b"]))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -3150,7 +3223,7 @@ def test_cep_or_split_neg_fuzz(streams, types, cap, within_s, neg_s):
 def test_cep_or_split_neg_state_fuzz(streams, types, cap, within_s,
                                      neg_s, cut):
     """The OR-split × terminal negation STREAMS (r15):
-    _cep_or_split_neg_fn (paired variant machines + watermark hold)
+    _cep_or_split_fn (paired variant machines) + the shell's hold
     driven through a fake timer GroupState with a random micro-batch
     split must emit exactly the batch rows — lexicographic winner,
     pools, kills across the boundary, and the timer-path flush."""
@@ -3159,7 +3232,7 @@ def test_cep_or_split_neg_state_fuzz(streams, types, cap, within_s,
     from dataclasses import replace as dc_replace
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_or_split_neg_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_or_split_fn
 
     a_t, b_t, c_t, y_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -3184,13 +3257,12 @@ def test_cep_or_split_neg_state_fuzz(streams, types, cap, within_s,
           dc_replace(sp, one_or_more=False, times=1, up_to=None),
           pat.steps[2]]
     hi = [pat.steps[0], dc_replace(sp, times=2), pat.steps[2]]
-    fn = _cep_or_split_neg_fn(
+    fn = _cep_keyed_fn(_cep_or_split_fn(
         [(None, pat._event_expansion(lo)),
          (None, pat._event_expansion(hi))],
         within_s * 1_000_000,
         [("b", b_t, cap)],
-        y_t, neg_s * 1_000_000,
-    )
+    ), y_t, neg_s * 1_000_000)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -3326,7 +3398,7 @@ def test_cep_enum_neg_fuzz(streams, types, within_s, neg_s):
 )
 def test_cep_enum_neg_state_fuzz(streams, types, within_s, neg_s, cut):
     """Strict-optional enum × terminal negation STREAMS (r15):
-    _cep_enum_neg_fn (2^k variant chains + watermark hold) driven
+    _cep_compiled_fn's enum mode + the shell's hold, driven
     through a fake timer GroupState with a random micro-batch split
     must emit exactly the batch rows — OR-gated matches, greedy
     max-start across variants, flags riding the hold, kills and the
@@ -3334,7 +3406,7 @@ def test_cep_enum_neg_state_fuzz(streams, types, within_s, neg_s, cut):
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_enum_neg_fn
+    from sparkflow.streaming.stateful import _cep_compiled_fn, _cep_keyed_fn
 
     a_t, b_t, c_t, y_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -3363,8 +3435,9 @@ def test_cep_enum_neg_state_fuzz(streams, types, within_s, neg_s, cut):
         (None, pat._event_expansion(list(pat.steps))),
     ]
     masks = [frozenset(), frozenset({"with_b"})]
-    fn = _cep_enum_neg_fn(chains, within_s * 1_000_000, masks,
-                          ["with_b"], y_t, neg_s * 1_000_000)
+    fn = _cep_keyed_fn(_cep_compiled_fn(chains, within_s * 1_000_000,
+                                        enum=(masks, ["with_b"])),
+                       y_t, neg_s * 1_000_000)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -3560,7 +3633,7 @@ def test_cep_until_state_fuzz(streams, types, quant, cap, within_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_until_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_until_fn
 
     a_t, b_t, c_t, u_t = types
     if quant == 2 and cap is None:
@@ -3587,12 +3660,10 @@ def test_cep_until_state_fuzz(streams, types, quant, cap, within_s,
         ).collect()
     }
 
-    fn = _cep_until_fn(
+    fn = _cep_keyed_fn(_cep_until_fn(
         pat._until_expansion(), within_s * 1_000_000,
         [("b", b_t, cap, u_t)],
-        "A" if with_neg else None,
-        neg_s * 1_000_000 if with_neg else None,
-    )
+    ), "A" if with_neg else None, neg_s * 1_000_000 if with_neg else None)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -3653,7 +3724,7 @@ def test_cep_not_next_until_fuzz(streams, types, nn_t, cap, within_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_until_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_until_fn
 
     a_t, b_t, c_t, u_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -3685,14 +3756,12 @@ def test_cep_not_next_until_fuzz(streams, types, nn_t, cap, within_s,
                  if s.one_or_more or s.up_to is not None]
     steps_u = pat._until_expansion()
     _sx, nn_ets = pat._not_next_expansion()
-    fn = _cep_until_fn(
+    fn = _cep_keyed_fn(_cep_until_fn(
         steps_u, within_s * 1_000_000,
         [("b", b_t, cap, u_t)],
-        "A" if with_neg else None,
-        neg_s * 1_000_000 if with_neg else None,
         entry_idx=pat._until_entry_indices(pat.steps, cnt_steps),
         nn_ets=nn_ets,
-    )
+    ), "A" if with_neg else None, neg_s * 1_000_000 if with_neg else None)
     got_s = {}
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4004,7 +4073,7 @@ def test_cep_until_optional_state_fuzz(streams, types, opt_pos,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_until_split_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_until_split_fn
 
     a_t, o_t, b_t, c_t, u_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4042,13 +4111,11 @@ def test_cep_until_optional_state_fuzz(streams, types, opt_pos,
         entry.append(pat._until_entry_indices(chain, cnt_steps))
         incl.append(frozenset(
             f"with_{s.name}" for i, s in opts if i in inc))
-    fn = _cep_until_split_fn(
+    fn = _cep_keyed_fn(_cep_until_split_fn(
         variant_steps, within_s * 1_000_000,
         [("b", b_t, None, u_t)],
-        "A" if with_neg else None,
-        neg_s * 1_000_000 if with_neg else None,
         incl, ["with_o"], entry,
-    )
+    ), "A" if with_neg else None, neg_s * 1_000_000 if with_neg else None)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4109,7 +4176,7 @@ def test_cep_until_or_split_state_fuzz(streams, types, cap_c,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_until_split_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_until_split_fn
 
     a_t, b_t, c_t, d_t, u_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4157,12 +4224,10 @@ def test_cep_until_or_split_state_fuzz(streams, types, cap_c,
             else:
                 var.append(s)
         variant_steps.append(pat._until_expansion(var))
-    fn = _cep_until_split_fn(
+    fn = _cep_keyed_fn(_cep_until_split_fn(
         variant_steps, within_s * 1_000_000,
         [("b", b_t, None, u_t), ("c", c_t, cap_c, None)],
-        "A" if with_neg else None,
-        neg_s * 1_000_000 if with_neg else None,
-    )
+    ), "A" if with_neg else None, neg_s * 1_000_000 if with_neg else None)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4316,7 +4381,7 @@ def test_cep_not_next_state_fuzz(streams, types, shape, within_s,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_not_next_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_not_next_fn
 
     a_t, x_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4348,9 +4413,10 @@ def test_cep_not_next_state_fuzz(streams, types, shape, within_s,
 
     steps_x, nn_ets = pat._not_next_expansion()
     counted = ([("b", b_t, None)] if shape == "counted" else [])
-    fn = _cep_not_next_fn(steps_x, within_s * 1_000_000, counted,
-                          nn_ets, "B" if with_neg else None,
-                          neg_s * 1_000_000 if with_neg else None)
+    fn = _cep_keyed_fn(_cep_not_next_fn(steps_x, within_s * 1_000_000,
+                                        counted, nn_ets),
+                       "B" if with_neg else None,
+                       neg_s * 1_000_000 if with_neg else None)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4598,7 +4664,7 @@ def test_cep_not_next_skip_state_fuzz(streams, types, strategy, nn_on,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_skip_fn
+    from sparkflow.streaming.stateful import _cep_keyed_fn, _cep_skip_fn
 
     a_t, x_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4625,8 +4691,8 @@ def test_cep_not_next_skip_state_fuzz(streams, types, strategy, nn_on,
     }
 
     steps_x, nn_ets = pat._not_next_expansion()
-    fn = _cep_skip_fn(steps_x, within_s * 1_000_000, strategy,
-                      pat._skip_anchor_idx(), nn_ets)
+    fn = _cep_keyed_fn(_cep_skip_fn(steps_x, within_s * 1_000_000, strategy,
+                                    pat._skip_anchor_idx(), nn_ets))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4675,7 +4741,7 @@ def test_cep_not_next_gap_state_fuzz(streams, types, strict_mask,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_fn
+    from sparkflow.streaming.stateful import _cep_gap_fn, _cep_keyed_fn
 
     a_t, x_t, b_t, c_t = types
     strict = [False,
@@ -4707,7 +4773,7 @@ def test_cep_not_next_gap_state_fuzz(streams, types, strict_mask,
     }
 
     steps_x, nn_ets = pat._not_next_expansion()
-    fn = _cep_gap_fn(steps_x, None, gap_s * 1_000_000, nn_ets)
+    fn = _cep_keyed_fn(_cep_gap_fn(steps_x, None, gap_s * 1_000_000, nn_ets))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4756,7 +4822,7 @@ def test_cep_not_next_gap_skip_state_fuzz(streams, types, strategy,
     import pandas as pd
 
     from sparkflow.streaming.cep import CepPattern
-    from sparkflow.streaming.stateful import _cep_gap_skip_fn
+    from sparkflow.streaming.stateful import _cep_gap_skip_fn, _cep_keyed_fn
 
     a_t, x_t, b_t, c_t = types
     rows, df = _cep_df(_get_spark(), streams)
@@ -4784,8 +4850,9 @@ def test_cep_not_next_gap_skip_state_fuzz(streams, types, strategy,
     }
 
     steps_x, nn_ets = pat._not_next_expansion()
-    fn = _cep_gap_skip_fn(steps_x, None, gap_s * 1_000_000, strategy,
-                          pat._skip_anchor_idx(), nn_ets)
+    fn = _cep_keyed_fn(_cep_gap_skip_fn(steps_x, None, gap_s * 1_000_000,
+                                        strategy, pat._skip_anchor_idx(),
+                                        nn_ets))
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
@@ -4834,9 +4901,10 @@ def test_cep_not_next_neg_composites_state_fuzz(streams, types, mode,
 
     from sparkflow.streaming.cep import CepPattern
     from sparkflow.streaming.stateful import (
-        _cep_gap_neg_fn,
-        _cep_gap_skip_neg_fn,
-        _cep_skip_neg_fn,
+        _cep_gap_fn,
+        _cep_gap_skip_fn,
+        _cep_keyed_fn,
+        _cep_skip_fn,
     )
 
     a_t, b_t, x_t = types
@@ -4869,15 +4937,15 @@ def test_cep_not_next_neg_composites_state_fuzz(streams, types, mode,
 
     steps_x, nn_ets = pat._not_next_expansion()
     if mode == "skip":
-        fn = _cep_skip_neg_fn(steps_x, None, strategy, None,
-                              x_t, neg_s * 1_000_000, nn_ets)
+        fn = _cep_keyed_fn(_cep_skip_fn(steps_x, None, strategy, None, nn_ets),
+                           x_t, neg_s * 1_000_000)
     elif mode == "gap":
-        fn = _cep_gap_neg_fn(steps_x, None, gap_s * 1_000_000,
-                             x_t, neg_s * 1_000_000, nn_ets)
+        fn = _cep_keyed_fn(_cep_gap_fn(steps_x, None, gap_s * 1_000_000,
+                                       nn_ets), x_t, neg_s * 1_000_000)
     else:
-        fn = _cep_gap_skip_neg_fn(steps_x, None, gap_s * 1_000_000,
-                                  strategy, None, x_t,
-                                  neg_s * 1_000_000, nn_ets)
+        fn = _cep_keyed_fn(_cep_gap_skip_fn(steps_x, None, gap_s * 1_000_000,
+                                            strategy, None, nn_ets),
+                           x_t, neg_s * 1_000_000)
     got = set()
     by_user: dict = {}
     for uid, ev_id, typ, sec in rows:
